@@ -30,8 +30,13 @@ NULL_PHRASES = [
 
 def fix_mojibake(c: Column | str) -> Column:
     """Repair the two known mojibake sequences (utils.py:146-152,
-    transform_alchemer_data.py:20-23): ``â€™`` -> ``'`` and ``Ã`` -> ``i``."""
-    return F.regexp_replace(F.regexp_replace(F.col(c) if isinstance(c, str) else c, "â€™", "'"), "Ã", "i")
+    transform_alchemer_data.py:20-23): ``â€™`` -> ``'`` and ``Ã`` -> ``i``.
+
+    A literal replace, not a regex one: neither pattern holds a regex
+    metacharacter, so the output is the same, and the literal kernel
+    skips the regex matcher on every string cell."""
+    col = F.col(c) if isinstance(c, str) else c
+    return F.replace(F.replace(col, F.lit("â€™"), F.lit("'")), F.lit("Ã"), F.lit("i"))
 
 
 def fix_mojibake_name(name: str) -> str:

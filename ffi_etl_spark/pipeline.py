@@ -10,7 +10,11 @@ the reference's workflow DAG).
 
 Each stage is ONE lazy plan ending in its write — the reference's
 mid-stage ``collect()`` scalars are gone (SURVEY.md §4), so a stage
-triggers exactly one job per output table.
+without shuffles triggers exactly one job per output table: its write
+(shuffles add their own stage jobs under AQE). The single re-read after
+the write passes the schema just written, so no parquet
+schema-inference job runs, and the table's temp view is registered from
+that same frame.
 """
 
 from __future__ import annotations
@@ -64,9 +68,10 @@ class Pipeline:
     def run(self, spark: SparkSession, inputs: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
         """Run all stages; returns the accumulated table namespace.
 
-        Materialized outputs are written to ``{warehouse}/{table}`` and
-        re-read, so downstream stages consume the storage layer (scan
-        pushdown applies) rather than a giant fused in-memory plan.
+        Materialized outputs are written to ``{warehouse}/{table}``,
+        re-read once and registered as a temp view of the same name, so
+        downstream stages consume the storage layer (scan pushdown
+        applies) rather than a giant fused in-memory plan.
         """
         tables: dict[str, DataFrame] = dict(inputs or {})
         for st in self.stages:
@@ -84,9 +89,11 @@ class Pipeline:
                             )
                     df = df.observe(obs, *aggs)
                     path = os.path.join(self.warehouse, tname)
-                    write_table(df, path, name=tname)
+                    write_table(df, path)
                     self.metrics[tname] = obs.get
-                    tables[tname] = spark.read.parquet(path)
+                    # the written schema spares the read its inference job
+                    tables[tname] = spark.read.schema(df.schema).parquet(path)
+                    tables[tname].createOrReplaceTempView(tname)
                 else:
                     tables[tname] = df
         return tables

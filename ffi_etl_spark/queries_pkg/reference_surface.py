@@ -36,7 +36,7 @@ WITH base AS (
 SELECT 'Segment' AS "Demographic",
        "Category",
        "# of Survey Responses",
-       printf('%.2f%%', CAST(round(try_cast(CAST(("# of Survey Responses" * 100.0 / total_excl) AS VARCHAR) AS DECIMAL(30,12)), 2) AS DOUBLE)) AS "% of Survey Responses",
+       printf('%.2f%%', CAST(round(try_cast(CAST(("# of Survey Responses" * 100.0 / total_excl) AS VARCHAR) AS DECIMAL(38,20)), 2) AS DOUBLE)) AS "% of Survey Responses",
        CASE WHEN "Category" <> 'Unknown' THEN CAST(total_excl AS VARCHAR) ELSE '' END AS "Total Responses"
 FROM t
 ORDER BY "Category" DESC
@@ -384,7 +384,7 @@ def _timestamp_roundtrip(spark, sf_dir):
 _ROLLUP_CTE = """
   SELECT '{name}' AS "Demographic", "Category",
          "# of Survey Responses",
-         printf('%.2f%%', CAST(round(try_cast(CAST(("# of Survey Responses" * 100.0 / total_excl) AS VARCHAR) AS DECIMAL(30,12)), 2) AS DOUBLE)) AS "% of Survey Responses",
+         printf('%.2f%%', CAST(round(try_cast(CAST(("# of Survey Responses" * 100.0 / total_excl) AS VARCHAR) AS DECIMAL(38,20)), 2) AS DOUBLE)) AS "% of Survey Responses",
          CASE WHEN "Category" <> 'Unknown' THEN CAST(total_excl AS VARCHAR) ELSE '' END AS "Total Responses"
   FROM (
     SELECT "Category", "# of Survey Responses",
@@ -437,10 +437,14 @@ def _union_rollup_multi(spark, sf_dir):
 # (merge_census.py end-to-end). Census analog = supplier share per nation;
 # survey analog = customer roll-up per nation. Filters force both outer-join
 # sides to exist at every scale factor. JROUND in the oracle replicates
-# Spark's F.round (BigDecimal-on-shortest-repr, HALF_UP).
+# Spark's F.round (BigDecimal-on-shortest-repr, HALF_UP). The decimal
+# keeps 20 places so no digit of the shortest repr is lost before the
+# round: at 12 places -1.4499999999999993 became -1.45 and rounded to
+# -1.5, where Spark gives -1.4. The inline printf casts above and below
+# use the same width for the same reason.
 
 def _jround(x: str, n: int) -> str:
-    return f"CAST(round(try_cast(CAST(({x}) AS VARCHAR) AS DECIMAL(30,12)), {n}) AS DOUBLE)"
+    return f"CAST(round(try_cast(CAST(({x}) AS VARCHAR) AS DECIMAL(38,20)), {n}) AS DOUBLE)"
 
 
 _CENSUS_ORACLE = f"""
@@ -454,7 +458,7 @@ WITH cust_n AS (
 ), rollup AS (
   SELECT 'Nation' AS rd, cat AS rc,
          cnt AS n_resp,
-         printf('%.2f%%', CAST(round(try_cast(CAST((cnt * 100.0 / total_excl) AS VARCHAR) AS DECIMAL(30,12)), 2) AS DOUBLE)) AS pct_resp,
+         printf('%.2f%%', CAST(round(try_cast(CAST((cnt * 100.0 / total_excl) AS VARCHAR) AS DECIMAL(38,20)), 2) AS DOUBLE)) AS pct_resp,
          CASE WHEN cat <> 'Unknown' THEN CAST(total_excl AS VARCHAR) ELSE '' END AS total_resp
   FROM t
 ), sc AS (
@@ -464,7 +468,7 @@ WITH cust_n AS (
   GROUP BY 1, 2, 3
 ), census AS (
   SELECT 'Nation' AS cd, n_name AS cc,
-         printf('%.1f%%', CAST(round(try_cast(CAST((scnt * 100.0 / SUM(scnt) OVER ()) AS VARCHAR) AS DECIMAL(30,12)), 1) AS DOUBLE)) AS census_pct_str,
+         printf('%.1f%%', CAST(round(try_cast(CAST((scnt * 100.0 / SUM(scnt) OVER ()) AS VARCHAR) AS DECIMAL(38,20)), 1) AS DOUBLE)) AS census_pct_str,
          CASE WHEN n_regionkey = 2 THEN NULL ELSE n_nationkey END AS display_order
   FROM sc
 ), j AS (

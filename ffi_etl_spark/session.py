@@ -33,6 +33,13 @@ ENGINE_CONFS: dict[str, str] = {
     # as TIMESTAMP_NTZ truncated to micros; catalog._normalize casts it to
     # the session-zoned TIMESTAMP (UTC) — no legacy conf needed
     "spark.ui.enabled": "false",
+    # PySpark wraps every F.*/DataFrame call to record its Python call
+    # site (file:line) for the DataFrame query context of an error. That
+    # costs about five py4j round trips per call: about 10k of a survey
+    # run's 15k. Errors still raise, with their messages; only the
+    # Python file:line in the query context is lost. PySpark reads this
+    # once per process, so it must be set before the first column call.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

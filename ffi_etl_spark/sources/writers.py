@@ -33,13 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 def write_table(
     df: DataFrame,
     path: str,
-    name: str | None = None,
     mode: str = "overwrite",
     strict: bool = True,
     partition_by: list[str] | None = None,
 ) -> None:
-    """S7: overwrite-save as a parquet-backed 'managed table'; register
-    a temp view when ``name`` is given so ``spark.table(name)`` works."""
+    """S7: overwrite-save as a parquet-backed 'managed table'. Callers
+    that want ``spark.table(name)`` register the view from their own
+    re-read (``Pipeline.run`` does)."""
     try:
         writer = df.write.mode(mode)
         if partition_by:
@@ -49,9 +49,6 @@ def write_table(
         if strict:
             raise
         print(f"Error writing data to {path}: {e}")
-        return
-    if name is not None:
-        df.sparkSession.read.parquet(path).createOrReplaceTempView(name)
 
 
 def list_tables(spark: SparkSession, pattern: str | None = None) -> list[str]:

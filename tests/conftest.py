@@ -25,3 +25,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def registry_builds(spark, sf_dir):
+    """Every registered query built once at sf0.001, in registry order:
+    name -> (analyzed schema, formatted physical plan). Both
+    registry-wide sweeps (plan lint, nested output columns) assert on
+    this one record; building all the queries takes minutes, so each
+    sweep building them again doubled that."""
+    import __spark_entry__ as entry_mod
+    from tools.plan_lint import explain_formatted
+
+    builds = {}
+    for name, fn in entry_mod.queries().items():
+        df = fn(spark, sf_dir)
+        builds[name] = (df.schema, explain_formatted(spark, df))
+        spark.catalog.clearCache()
+    return builds

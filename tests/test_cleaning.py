@@ -5,14 +5,22 @@ transform_alchemer_data.py:13-39 — including the fused-phrase quirk.
 """
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from ffi_etl_spark.functions.cleaning import (
     NULL_PHRASES,
     clean_headers,
     clean_strings,
+    fix_mojibake,
+    fix_mojibake_name,
     validate_renames,
 )
+
+# the two mojibake sequences, their pieces, their replacements and
+# regex metacharacters: a regex kernel would read the latter as patterns
+_MOJIBAKE_TOKENS = ["â€™", "Ã", "â", "€", "™", "'", "i", ".", "*", "$", "\\", "a", " "]
 
 
 def _clean_one(spark, text):
@@ -23,6 +31,23 @@ def _clean_one(spark, text):
 def test_mojibake_fixed(spark):
     assert _clean_one(spark, "donâ€™t") == "don't"
     assert _clean_one(spark, "cafÃ©") == "cafi©"  # Ã -> i, verbatim reference rule
+
+
+@given(texts=st.lists(
+    st.lists(st.sampled_from(_MOJIBAKE_TOKENS), max_size=12).map("".join),
+    min_size=1, max_size=20,
+))
+@settings(
+    max_examples=8,  # one Spark job per example
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+def test_fix_mojibake_matches_driver_repair(spark, texts):
+    """The column kernel and the driver-side header repair agree on any
+    string, metacharacters included."""
+    df = spark.createDataFrame([Row(t=t) for t in texts])
+    got = [r.f for r in df.select(fix_mojibake("t").alias("f")).collect()]
+    assert got == [fix_mojibake_name(t) for t in texts]
 
 
 def test_null_phrases_nulled(spark):

@@ -143,7 +143,7 @@ def test_window_lead_lag_runs(spark):
     assert deltas and all(d >= 0 for d in deltas)
 
 
-def test_registry_no_nested_output_columns(spark):
+def test_registry_no_nested_output_columns(registry_builds):
     """Driver-canon contract (CORRECTNESS_r03 lesson): the driver's
     pandas canonicalizer sort_values()-es every output column and dies
     with `unhashable type: numpy.ndarray` on array/map/struct cells —
@@ -154,10 +154,8 @@ def test_registry_no_nested_output_columns(spark):
     time."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    sf = "/root/testdata/sf0.001"
     violations = []
-    for name, fn in entry_mod.queries().items():
-        schema = fn(spark, sf).schema
+    for name, (schema, _) in registry_builds.items():
         for field in schema.fields:
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 violations.append(f"{name}.{field.name}: {field.dataType.simpleString()}")

@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ffi_etl_spark.queries import QUERIES
 from tools.plan_lint import explain_formatted, lint_plan, waive
 
 
@@ -89,15 +88,14 @@ CartesianProduct (5)
     assert any("CartesianProduct" in f for f in lint_plan(with_subquery))
 
 
-def test_registry_plans_clean(spark, sf_dir):
+def test_registry_plans_clean(registry_builds):
     """The actual sweep: no non-allowlisted query ships a banned plan
-    shape. Slow-ish (builds every registered plan at sf0.001) but this
-    is the machine version of the per-round human plan audit."""
+    shape. Every registered plan is built at sf0.001 (once, shared with
+    test_entry's nested-column sweep); this is the machine version of
+    the per-round human plan audit."""
     bad: dict[str, list[str]] = {}
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_dir)
-        findings = waive(name, lint_plan(explain_formatted(spark, df)))
+    for name, (_, plan) in registry_builds.items():
+        findings = waive(name, lint_plan(plan))
         if findings:
             bad[name] = findings
-        spark.catalog.clearCache()
     assert bad == {}, f"plan lint: {bad}"

@@ -276,3 +276,64 @@ def test_pipeline_observe_metrics_ride_the_write(spark, tmp_path):
     assert tables["out"].count() == 100
     assert pipe.metrics["out"]["n_rows"] == 100
     assert pipe.metrics["out"]["nulls:v"] == 10
+
+
+def test_pipeline_one_job_per_materialized_table(spark, tmp_path):
+    """A stage with no shuffle costs exactly its write job: the re-read
+    gets the written schema, so no parquet schema-inference job runs,
+    and the temp view is registered from that same re-read."""
+    from pyspark.sql import functions as F
+
+    from ffi_etl_spark.pipeline import Pipeline
+
+    pipe = Pipeline(str(tmp_path / "wh"))
+
+    @pipe.stage("s1")
+    def _s1(spark_, t):
+        return {"p_one": spark_.range(20).select("id", (F.col("id") * 2).alias("v"))}
+
+    @pipe.stage("s2")
+    def _s2(spark_, t):
+        return {"p_two": t["p_one"].filter(F.col("id") % 2 == 0).select("id", "v")}
+
+    sc = spark.sparkContext
+    group = "test_pipeline_one_job_per_materialized_table"
+    sc.setJobGroup(group, "two-stage pipeline")
+    try:
+        pipe.run(spark, {})
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert sorted(r.id for r in spark.table("p_one").collect()) == list(range(20))
+    assert sorted((r.id, r.v) for r in spark.table("p_two").collect()) == [
+        (i, 2 * i) for i in range(0, 20, 2)
+    ]
+
+
+def test_session_skips_call_site_capture_and_still_raises(spark):
+    """The session turns off PySpark's per-call Python call-site capture
+    (about five py4j round trips per column call); analysis errors still
+    raise."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.utils import is_debugging_enabled
+
+    # the fixture session comes from get_session
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        spark.range(3).select("no_such_column").collect()
+
+
+def test_oracle_jround_matches_spark_round(spark):
+    """The survey oracle's rounding helper rounds as Spark's F.round
+    does, on every digit of the double's shortest repr: at 12 decimal
+    places -1.4499999999999993 became -1.45 and rounded to -1.5."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from ffi_etl_spark.queries_pkg.reference_surface import _jround
+
+    x = "-1.4499999999999993"
+    want = spark.range(1).select(F.round(F.lit(float(x)), 1).alias("r")).first().r
+    assert want == -1.4
+    assert duckdb.sql(f"SELECT {_jround(x + '::DOUBLE', 1)}").fetchone()[0] == want

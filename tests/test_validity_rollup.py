@@ -143,6 +143,9 @@ def test_rollup_all_mixed_dtypes_take_per_frame_fallback(spark):
     assert sorted(
         map(tuple, out.collect()), key=lambda t: tuple(map(str, t))
     ) == sorted(map(tuple, per_frame.collect()), key=lambda t: tuple(map(str, t)))
+
+
+def test_rollup_total_via_broadcast_equivalent(spark):
     """The broadcast-total variant (high-cardinality-safe plan) must be
     value-identical to the window-total default."""
     df = spark.createDataFrame(
